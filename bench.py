@@ -1141,21 +1141,27 @@ def _insert_queries_budgeted(
     bq: dict[str, float] = {}
     sq: dict[str, float] = {}
 
+    def _put_batch(out: dict) -> None:
+        if bq:
+            out["queries"] = bq
+        if batch_q and len(bq) < len(batch_q):
+            out["queries_omitted"] = len(batch_q) - len(bq)
+
     def _assembled() -> dict:
         out: dict = {}
         for k, v in slim.items():
-            if k == "sf" and bq:
+            if k == "sf":
                 # the driver contract's documented key order puts
                 # "queries" right before "sf"
-                out["queries"] = bq
-                if batch_q and len(bq) < len(batch_q):
-                    out["queries_omitted"] = len(batch_q) - len(bq)
+                _put_batch(out)
             if k == "streaming" and isinstance(v, dict) and sq:
                 v = dict(v)
                 v["queries"] = sq
                 if stream_q and len(sq) < len(stream_q):
                     v["queries_omitted"] = len(stream_q) - len(sq)
             out[k] = v
+        if "sf" not in slim:
+            _put_batch(out)  # no contract anchor: append at the end
         return out
 
     best = _assembled()

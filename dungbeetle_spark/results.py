@@ -8,24 +8,39 @@ sqldb.go:230-305; README "Results"). Schema generation is cached per
 task name (sqldb.go:38-41, 147-153) and every job DROPs + re-CREATEs
 its own table (sqldb.go:179-186) — i.e. overwrite semantics.
 
-Spark-first mapping: the whole row-at-a-time INSERT pipeline
-(core.go:556-565, sqldb.go:195-207 — one INSERT per row in one tx)
-collapses to a single columnar write::
+Spark-first mapping: the row-at-a-time INSERT pipeline (core.go:556-565,
+sqldb.go:195-207 — one INSERT per row in one tx) becomes one columnar
+write of the canonical-cast frame, by one of two routes chosen from
+the optimizer's size estimate of that frame
+(``optimizedPlan.stats.sizeInBytes``):
 
-    df.select(*canonical_casts).write.mode("overwrite").parquet(path)
+- **driver route** — the estimate is at most the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` (the bound Spark already
+  uses to pull a broadcast side through the driver; <= 0 disables the
+  route) and the task has no ``partition_by``. The result is collected
+  once as Arrow and written as a single ``part-00000.parquet`` carrying
+  Spark's own schema footer, into a sibling staging dir that is swapped
+  in by rename. A small result thus skips Hadoop's file commit
+  (committer mkdirs, ``_SUCCESS``, ``.crc`` files), which dominates the
+  latency of a small job. Readers never see a partial table.
+- **distributed route** — everything else: Spark's parquet writer in
+  overwrite mode, parallel on the cluster, with the row count taken by
+  an ``Observation`` on the write pass. A driver-route collect that
+  aborts on ``spark.driver.maxResultSize`` (the estimate can undershoot,
+  e.g. past an ``explode``) falls back to this route.
 
-which is parallel, compressed, and scales to any cluster size; the
-"one transaction per result set" property maps to parquet's
-atomic-enough directory swap (same guarantee level as the reference's
-DROP+CREATE window).
+Both routes land the same table: equal schema and rows on read.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import random
 import re
 import shutil
 import threading
+import uuid
 from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,6 +119,7 @@ class ParquetResultBackend:
         self._schemas: dict[str, T.StructType] = {}
         self._lock = threading.Lock()
         self._compacting: set[str] = set()  # tables mid-compaction
+        self._staging: set[str] = set()  # live driver-route staging dirs
 
     # -- naming -------------------------------------------------------
     def table_name(self, job_id: str) -> str:
@@ -132,31 +148,98 @@ class ParquetResultBackend:
         """Canonical-cast + overwrite ``results_<job_id>``; return rowcount.
 
         The row count is the job's only "result" payload, surfaced by
-        status polls (core.go:436, 183-190). It comes from an
-        ``Observation`` on the write pass itself — rows are counted as
-        they stream through the writer, so there is no second scan of
-        the result (and no recompute of the query): the 100 TB-correct
-        way to get write metrics.
+        status polls (core.go:436, 183-190). A driver-sized result with
+        no ``partition_by`` is collected once as Arrow and swapped in
+        whole (``_write_collected``; the count is the collected table's
+        length); anything else, or a collect that aborts on
+        ``spark.driver.maxResultSize``, goes through Spark's writer
+        (``_write_distributed``). See the module docstring for the
+        size bound.
         """
+        out = canonical_cast(df)
+        with self._lock:
+            self._schemas.setdefault(task_name, out.schema)
+        cols = list(partition_by)
+        if not cols and _driver_sized(out):
+            n = self._write_collected(job_id, out)
+            if n is not None:
+                return n
+        return self._write_distributed(job_id, out, cols)
+
+    def _write_collected(self, job_id: str, out: DataFrame) -> int | None:
+        """One Arrow collect (inside the caller's job group, so a cancel
+        interrupts it), one ``part-00000.parquet`` in a staging dir,
+        one swap. Spark's schema footer makes the file read back with
+        the exact schema Spark's own writer would have recorded.
+        Returns None, having written nothing, when the collect aborts
+        on ``spark.driver.maxResultSize``."""
+        import pyarrow.parquet as pq
+
+        try:
+            table = out.toArrow()
+        except Exception as exc:  # noqa: BLE001 - py4j or pyspark error
+            if "spark.driver.maxResultSize" in str(exc):
+                return None
+            raise
+        table = table.replace_schema_metadata(
+            {
+                _SPARK_SCHEMA_KEY: out.schema.json(),
+                _SPARK_VERSION_KEY: out.sparkSession.version,
+            }
+        )
+        path = self.table_path(job_id)
+        staging = f"{path}__writing_{uuid.uuid4().hex[:8]}"
+        with self._lock:
+            self._staging.add(staging)
+        try:
+            os.makedirs(staging)
+            pq.write_table(table, f"{staging}/part-00000.parquet")
+            self._swap_in(staging, path)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+            with self._lock:
+                self._staging.discard(staging)
+        return table.num_rows
+
+    def _write_distributed(
+        self, job_id: str, out: DataFrame, partition_by: list[str]
+    ) -> int:
+        """Spark's parquet writer, overwriting in place. The count comes
+        from an ``Observation`` on the write pass itself — rows are
+        counted as they stream through the writer, so there is no
+        second scan of the result (and no recompute of the query)."""
         from pyspark.sql import Observation
 
         obs = Observation()
-        out = canonical_cast(df).observe(obs, F.count(F.lit(1)).alias("n"))
-        with self._lock:
-            self._schemas.setdefault(task_name, out.schema)
-        path = self.table_path(job_id)
-        writer = out.write.mode("overwrite")
-        cols = list(partition_by)
-        if cols:
-            writer = writer.partitionBy(*cols)
-        writer.parquet(path)
+        writer = out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        )
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(self.table_path(job_id))
         return int(obs.get["n"])
+
+    def _swap_in(self, staged: str, path: str, must_exist: bool = False) -> None:
+        """Replace ``path`` by the fully written ``staged`` dir: two
+        renames under the backend lock, serialized against
+        delete/reaper, compacts and other writes. The crash window
+        between the renames is the reference's DROP+CREATE guarantee
+        level (sqldb.go:179-186). ``must_exist`` refuses to resurrect
+        a table deleted meanwhile."""
+        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
+        with self._lock:
+            if os.path.isdir(path):
+                os.rename(path, old)
+            elif must_exist:
+                raise FileNotFoundError(f"{path} was deleted during compaction")
+            os.rename(staged, path)
+            shutil.rmtree(old, ignore_errors=True)
 
     def read(self, spark: SparkSession, job_id: str) -> DataFrame:
         return spark.read.parquet(self.table_path(job_id))
 
     def delete(self, job_id: str) -> None:
-        with self._lock:  # serialize vs a concurrent compact's swap
+        with self._lock:  # serialize vs a concurrent swap
             shutil.rmtree(self.table_path(job_id), ignore_errors=True)
 
     def compact(
@@ -169,17 +252,12 @@ class ParquetResultBackend:
         becomes a metadata/open-cost problem for every reader. The
         rewrite lands in a sibling temp dir with the row count taken
         from an Observation on the write pass (no re-read), is
-        verified against the source count, and swaps via rename under
-        the backend lock (serialized against delete/reaper and other
-        compacts — the crash window between the two renames is the
-        same guarantee level as the reference's DROP+CREATE,
-        sqldb.go:179-186). Hive-partitioned result tables
-        (``partition_by`` tasks) are refused: a flat rewrite would
-        drop the layout and partition-type inference can corrupt
-        key values (e.g. leading zeros). Returns the row count.
+        verified against the source count, and is swapped in by
+        ``_swap_in``. Hive-partitioned result tables (``partition_by``
+        tasks) are refused: a flat rewrite would drop the layout and
+        partition-type inference can corrupt key values (e.g. leading
+        zeros). Returns the row count.
         """
-        import os
-
         from pyspark.sql import Observation
 
         path = self.table_path(job_id)
@@ -191,23 +269,22 @@ class ParquetResultBackend:
                 f"{path} is hive-partitioned (partition_by task); "
                 "compaction would flatten the layout"
             )
-        import glob
-        import uuid
-
         # One compaction per table at a time: a second concurrent call
         # fails fast instead of racing the first one's scratch dirs.
         with self._lock:
             if path in self._compacting:
                 raise RuntimeError(f"compaction of {path} already in progress")
             self._compacting.add(path)
-            # stale scratch from crashed runs (safe: no live compact)
-            for stale in glob.glob(f"{path}__compacting_*") + glob.glob(
-                f"{path}__old_*"
+            # scratch left by crashed compacts and writes (live write
+            # staging dirs are tracked and kept)
+            for stale in (
+                glob.glob(f"{path}__compacting_*")
+                + glob.glob(f"{path}__old_*")
+                + glob.glob(f"{path}__writing_*")
             ):
-                shutil.rmtree(stale, ignore_errors=True)
-        token = uuid.uuid4().hex[:8]
-        tmp = f"{path}__compacting_{token}"
-        old = f"{path}__old_{token}"
+                if stale not in self._staging:
+                    shutil.rmtree(stale, ignore_errors=True)
+        tmp = f"{path}__compacting_{uuid.uuid4().hex[:8]}"
         try:
             df = spark.read.parquet(path)
             n_before = df.count()
@@ -224,19 +301,31 @@ class ParquetResultBackend:
                     f"compaction of {path} changed row count "
                     f"({n_before} -> {n_after}); original left untouched"
                 )
-            with self._lock:
-                if not os.path.isdir(path):  # deleted/reaped mid-compact
-                    raise FileNotFoundError(
-                        f"{path} was deleted during compaction"
-                    )
-                os.rename(path, old)
-                os.rename(tmp, path)
-                shutil.rmtree(old, ignore_errors=True)
+            self._swap_in(tmp, path, must_exist=True)
             return n_after
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
             with self._lock:
                 self._compacting.discard(path)
+
+
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+_SPARK_VERSION_KEY = "org.apache.spark.version"
+
+
+def _driver_sized(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``df`` is within the
+    session's broadcast bound (``spark.sql.autoBroadcastJoinThreshold``;
+    <= 0 disables the driver route). Joins multiply the estimate and
+    leaves without statistics report ``spark.sql.defaultSizeInBytes``,
+    so such plans mostly stay on the distributed route."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    bound = conf.autoBroadcastJoinThreshold()
+    if bound <= 0:
+        return False
+    # a Scala BigInt; str() reads it whether or not py4j converted it
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) <= bound
 
 
 class ResultBackends:

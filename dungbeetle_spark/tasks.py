@@ -146,6 +146,8 @@ def _parse_file(path: str) -> list[tuple[Task, dict[str, str]]]:
     def flush() -> None:
         nonlocal name, tags, sql_lines, seen_sql
         if name is None:
+            # a file header before the first `-- name:` belongs to no task
+            sql_lines, seen_sql = [], False
             return
         body = "\n".join(sql_lines).strip().rstrip(";").strip()
         if not body:

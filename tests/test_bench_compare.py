@@ -216,6 +216,23 @@ def test_insert_queries_budgeted_prefix_and_streaming_routing():
     assert "streaming" not in got2 and got2["queries"] == {"q": 1.0}
 
 
+def test_insert_queries_budgeted_without_sf_and_when_none_fit():
+    """Batch entries ride the line even when ``sf`` (their contract
+    anchor) is absent, and ``queries_omitted`` is emitted whenever
+    batch entries exist but not all are carried — zero carried
+    included."""
+    slim = {"metric": "m", "value": 1.0, "unit": "sec"}
+    batch = {"q_a": 3.0, "q_b": 2.0, "q_c": 1.0}
+    got = bench._insert_queries_budgeted(slim, batch, None, cap=500)
+    assert list(got)[-1] == "queries" and got["queries"] == batch
+    assert "queries_omitted" not in got
+    # a cap that fits the omitted counter but no entry
+    for s in (slim, {**slim, "sf": 0.1}):
+        cap = len(json.dumps({**s, "queries_omitted": 3}))
+        got = bench._insert_queries_budgeted(s, batch, None, cap=cap)
+        assert "queries" not in got and got["queries_omitted"] == 3
+
+
 def test_archive_and_reload_full_record_roundtrip(tmp_path):
     """The compact line breaks cross-round compares unless the full
     record is pinned per round: archive_full_records must copy

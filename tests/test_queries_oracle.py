@@ -536,6 +536,6 @@ def test_bpe_driver_loop_matches_distributed(spark, sf_oracle, monkeypatch):
     from dungbeetle_spark.operators import text as T
 
     fast = T._bpe_learn(spark, sf_oracle)  # guard routes to collected
-    monkeypatch.setattr(T, "_BPE_DRIVER_DOCS_MAX", -1)  # force distributed
+    monkeypatch.setattr(T, "_BPE_DRIVER_VOCAB_MAX", 0)  # force distributed
     slow = T._bpe_learn(spark, sf_oracle)
     assert fast == slow and len(fast) == T._BPE_MERGES

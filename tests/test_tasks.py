@@ -53,6 +53,17 @@ def test_parse_blocks_and_tags(task_dir):
     assert tasks["raw_one"].raw
 
 
+def test_leading_comment_block_is_not_part_of_the_first_task(tmp_path):
+    """A file header before the first ``-- name:`` belongs to no task:
+    the first task keeps its tags and a header-free statement (the
+    shipped tasks_sql/test.sql starts with such a header)."""
+    header = "-- Shipped task fixtures.\n-- Placeholders: $n and ?.\n\n"
+    (tmp_path / "test.sql").write_text(header + SAMPLE)
+    t = load_tasks([str(tmp_path)], source_names=["my_db"])["get_profit_summary"]
+    assert t.queue == "high" and t.conc == 5 and t.dbs == ["my_db"]
+    assert t.raw_stmt.startswith("SELECT SUM(amount)")
+
+
 def test_duplicate_names_rejected(tmp_path):
     (tmp_path / "a.sql").write_text("-- name: t1\nSELECT 1;\n")
     (tmp_path / "b.sql").write_text("-- name: t1\nSELECT 2;\n")
